@@ -1954,8 +1954,9 @@ def q_hz_p2p(spark: SparkSession, sf_dir: str) -> DataFrame:
         p2p_min_bytes_2nd=50_000,
     )
     # materialize the shared rollup once, as the production batch DAG
-    # does (plans/batch.py:60) — m1, m2 and the ftp suppression would
-    # otherwise each re-derive the full synth+rollup subtree
+    # does (plans/batch.py run_sflow_batch) — m1, m2 and the ftp
+    # suppression would otherwise each re-derive the full synth+rollup
+    # subtree
     summary = sflow_summary(
         _synth_sflows(spark, sf_dir), ["10.1."]
     ).localCheckpoint(eager=True)
@@ -1999,8 +2000,9 @@ def q_hz_portscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cfg = SFlowConfig(hps_min_flows=5)
     hcfg = HistogramConfig()
-    # shared-rollup materialization as in plans/batch.py:60: the flow
-    # tree and the seeded-state build both consume it
+    # shared-rollup materialization as in plans/batch.py
+    # run_sflow_batch: the flow tree and the seeded-state build both
+    # consume it
     summary = sflow_summary(
         _synth_sflows(spark, sf_dir), ["10.1."]
     ).localCheckpoint(eager=True).withColumn(
@@ -2859,7 +2861,7 @@ def q_hz_stateless_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     mynets = ["10.1."]
     pkts = _synth_sflows2(spark, sf_dir)
     # materialize the shared rollup once (the production batch DAG
-    # persists it too, plans/batch.py) — six detectors fan out of it
+    # materializes it too, plans/batch.py) — six detectors fan out of it
     summary = sflow_summary(pkts, mynets).localCheckpoint(eager=True)
     icmp = icmp_summary(pkts, mynets)
     no_p2p = spark.createDataFrame([], "myIP string")

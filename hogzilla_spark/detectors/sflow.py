@@ -1,6 +1,6 @@
 """sFlow detector suite (SURVEY.md §2.11) — declarative DataFrame plans.
 
-Each detector consumes the shared, persisted ``sflow_summary`` (A1) and
+Each detector consumes the shared, materialized ``sflow_summary`` (A1) and
 returns an alert DataFrame (schema from detectors.base.mk_alert).  The
 reference computes these as hand-written RDD pipelines with driver-side
 set materialization between detectors; here each inter-detector

@@ -96,9 +96,9 @@ def sflow_summary(sflows: DataFrame, my_nets: list[str]) -> DataFrame:
     """A1: the canonical 5-tuple rollup every TCP/UDP detector reads.
 
     One shuffle on (myIP, myPort, alienIP, alienPort, proto); map-side
-    partial aggregation is automatic.  Callers `.persist()` the result
-    when fanning out to many detectors (the reference `.cache`s too,
-    HogSFlow.scala:882).
+    partial aggregation is automatic.  Callers materialize the result
+    once when fanning out to many detectors (plans.batch uses
+    `materialize_cut`; the reference `.cache`s too, HogSFlow.scala:882).
     """
     oriented = orient_flows(sflows, my_nets).filter(
         F.col("IPprotocol").isin("6", "17")

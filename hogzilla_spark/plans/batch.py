@@ -12,14 +12,20 @@ from the reference):
                     └─ hPortScan / vPortScan (state)
 
 The reference funnels every inter-detector dependency through
-``collect()`` on the driver; here the only driver materialization is
-the tiny talker-IP lists (broadcast side of anti-joins), and even those
-stay DataFrames.
+``collect()`` on the driver and caches ``sflowSummary``
+(HogSFlow.scala:882).  Here the summary and the four dependency sets
+(FTP talker pairs, FTP server IPs, P2P talker IPs, media-client IPs)
+are materialized once per cycle through
+``sources.catalog.materialize_cut(always=True)``: every consumer reads
+them as small materialized leaves instead of re-deriving the
+rollup → FTP → P2P → media chain inside its own plan.  Below the cut
+gate (``HZ_CUT_MIN_INPUT_BYTES``) that is a ``localCheckpoint``; above
+it, the reliable, fault-tolerant checkpoint.  The sets stay DataFrames:
+consumers still join them with broadcast anti/semi joins, and only
+the home-network prefixes and the two whitelists reach the driver.
 
-Scale notes: ``summary`` is persisted once and fanned out to ~15
-consumers (the reference caches too, HogSFlow.scala:882); every
-dimension input is broadcast; state scoring is one equi-join per
-family; state writing is one upsert per run.
+Scale notes: every dimension input is broadcast; state scoring is one
+equi-join per family; state writing is one upsert per run.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from hogzilla_spark.detectors import sflow as D
 from hogzilla_spark.detectors import stateful as S
 from hogzilla_spark.detectors.base import signatures_df
 from hogzilla_spark.operators.rollup import icmp_summary, sflow_summary
+from hogzilla_spark.sources.catalog import materialize_cut
 from hogzilla_spark.state import store
 
 @dataclass
@@ -43,6 +50,7 @@ class BatchResult:
     inventory: DataFrame
     new_reputation: DataFrame  # (ip/prefix, list, list_type) self-learned
     per_detector: dict[str, DataFrame] = field(default_factory=dict)
+    my_nets: list[str] = field(default_factory=list)  # collected mynets prefixes
 
 def run_sflow_batch(
     spark: SparkSession,
@@ -57,23 +65,23 @@ def run_sflow_batch(
     my_nets = [r.prefix for r in mynets.select("prefix").collect()]
     scfg, hcfg = cfg.sflow, cfg.hist
 
-    summary = sflow_summary(sflows, my_nets).persist()
+    # shared per-cycle inputs: computed once, read by every consumer
+    summary = materialize_cut(sflow_summary(sflows, my_nets), always=True)
     icmp = icmp_summary(sflows, my_nets)
 
-    def rep_list(lst: str, typ: str) -> DataFrame:
-        return reputation.filter(
-            (F.col("list") == lst) & (F.col("list_type") == typ)
-        ).select(F.col("ip").alias("prefix"))
-
     # dependency dimensions
-    ftp_pairs = D.ftp_talkers(summary)
-    ftp_ips = D.ftp_servers(histograms)
-    proxy_servers = [
-        r.prefix for r in rep_list("ProxyServer", "whitelist").collect()
-    ]
-    big_provider_nets = [
-        r.prefix for r in rep_list("BigProvider", "whitelist").collect()
-    ]
+    ftp_pairs = materialize_cut(D.ftp_talkers(summary), always=True)
+    ftp_ips = materialize_cut(D.ftp_servers(histograms), always=True)
+    whitelists = (
+        reputation.filter(
+            (F.col("list_type") == "whitelist")
+            & F.col("list").isin("ProxyServer", "BigProvider")
+        )
+        .select("list", "ip")
+        .collect()
+    )
+    proxy_servers = [r.ip for r in whitelists if r.list == "ProxyServer"]
+    big_provider_nets = [r.ip for r in whitelists if r.list == "BigProvider"]
 
     def enabled(name: str) -> bool:
         return name not in scfg.disabled
@@ -86,10 +94,12 @@ def run_sflow_batch(
     p2p_alerts, p2p_ips = D.p2p_talkers(
         summary, my_nets, scfg, ftp_pairs, ftp_ips, batch_time
     )
+    p2p_ips = materialize_cut(p2p_ips, always=True)
     per["p2p"] = p2p_alerts
     media_alerts, media_ips = D.media_streaming_clients(
         summary, my_nets, scfg, p2p_ips, batch_time
     )
+    media_ips = materialize_cut(media_ips, always=True)
     per["media_client"] = media_alerts
     if enabled("dns_tunnel"):
         per["dns_tunnel"] = D.dns_tunnel(summary, my_nets, scfg, batch_time)
@@ -104,9 +114,10 @@ def run_sflow_batch(
             summary, my_nets, scfg, batch_time
         )
     if enabled("cc_botnet"):
-        per["cc_botnet"] = D.cc_botnet(
-            summary, rep_list("CCBotNet", "blacklist"), scfg, batch_time
-        )
+        cc_nets = reputation.filter(
+            (F.col("list") == "CCBotNet") & (F.col("list_type") == "blacklist")
+        ).select(F.col("ip").alias("prefix"))
+        per["cc_botnet"] = D.cc_botnet(summary, cc_nets, scfg, batch_time)
     if enabled("ddos"):
         per["ddos"] = D.ddos_attack(summary, my_nets, scfg, p2p_ips, batch_time)
     if enabled("top_talkers"):
@@ -179,7 +190,7 @@ def run_sflow_batch(
             F.lit("whitelist").alias("list_type"),
         )
     )
-    return BatchResult(alerts, state_updates, inventory, new_reputation, per)
+    return BatchResult(alerts, state_updates, inventory, new_reputation, per, my_nets)
 
 def run_and_persist(
     spark: SparkSession,
@@ -247,7 +258,6 @@ def run_full_batch(
     result = run_sflow_batch(
         spark, sflows, mynets, reputation, histograms, cfg, batch_time
     )
-    my_nets = [r.prefix for r in mynets.select("prefix").collect()]
 
     if flows is not None and not flows.isEmpty():
         def kmeans_alert(members: DataFrame, sig_key: str) -> DataFrame:
@@ -291,7 +301,7 @@ def run_full_batch(
                 result.alerts = result.alerts.unionByName(result.per_detector[name])
 
     # M4/M6: server-profile clustering over the saved HIST01 state
-    clusters, members = histogram_clustering(histograms, my_nets, cfg.ml)
+    clusters, members = histogram_clustering(histograms, result.my_nets, cfg.ml)
     result.per_detector["hist_clusters"] = clusters
     result.per_detector["hist_cluster_members"] = members
     return result

@@ -1,7 +1,10 @@
 """End-to-end full-batch test: the Hogzilla.main-equivalent DAG with
 sFlow + ML modules + histogram clustering in one pass."""
 
+from functools import reduce
+
 import pyspark.sql.functions as F
+from pyspark.sql import DataFrame
 
 from hogzilla_spark import datagen
 from hogzilla_spark.plans.batch import run_full_batch
@@ -58,3 +61,130 @@ def test_disable_flags_skip_detectors(spark):
     sigs = {row.signature_id for row in r.alerts.select("signature_id").distinct().collect()}
     assert 826001012 not in sigs and 826001016 not in sigs
     assert 826001013 in sigs  # icmp tunnel still runs
+
+
+def _lazy_sflow_batch(spark, sflows, mynets, reputation, histograms, cfg, batch_time):
+    """Reference twin of run_sflow_batch with NOTHING materialized: the
+    same detector functions fed the lazy summary and lazy dependency
+    frames, assembled in the same order.  Returns (alerts,
+    state_updates, inventory, new_reputation)."""
+    from hogzilla_spark.detectors import sflow as D
+    from hogzilla_spark.detectors import stateful as S
+    from hogzilla_spark.operators.rollup import icmp_summary, sflow_summary
+
+    my_nets = [r.prefix for r in mynets.select("prefix").collect()]
+    scfg, hcfg = cfg.sflow, cfg.hist
+    summary = sflow_summary(sflows, my_nets)
+    icmp = icmp_summary(sflows, my_nets)
+
+    def rep_list(lst, typ):
+        return reputation.filter(
+            (F.col("list") == lst) & (F.col("list_type") == typ)
+        ).select(F.col("ip").alias("prefix"))
+
+    ftp_pairs = D.ftp_talkers(summary)
+    ftp_ips = D.ftp_servers(histograms)
+    proxy_servers = [r.prefix for r in rep_list("ProxyServer", "whitelist").collect()]
+    big_provider_nets = [r.prefix for r in rep_list("BigProvider", "whitelist").collect()]
+
+    alerts = [D.smtp_talkers(summary, my_nets, scfg, histograms, batch_time)]
+    p2p_alerts, p2p_ips = D.p2p_talkers(summary, my_nets, scfg, ftp_pairs, ftp_ips, batch_time)
+    media_alerts, media_ips = D.media_streaming_clients(summary, my_nets, scfg, p2p_ips, batch_time)
+    alerts += [
+        p2p_alerts,
+        media_alerts,
+        D.dns_tunnel(summary, my_nets, scfg, batch_time),
+        D.icmp_tunnel(icmp, scfg, batch_time),
+        D.udp_amplifier(summary, my_nets, scfg, batch_time),
+        D.abused_smtp(summary, my_nets, scfg, batch_time),
+        D.alien_accessing_many_hosts(summary, my_nets, scfg, batch_time),
+        D.cc_botnet(summary, rep_list("CCBotNet", "blacklist"), scfg, batch_time),
+        D.ddos_attack(summary, my_nets, scfg, p2p_ips, batch_time),
+        D.top_talkers(summary, my_nets, scfg, batch_time),
+    ]
+    at_alerts, at_updates, new_proxies = S.atypical_tcp_port(
+        summary, my_nets, scfg, hcfg, histograms, ftp_pairs, p2p_ips,
+        proxy_servers, batch_time,
+    )
+    aa_alerts, aa_updates = S.atypical_alien_tcp_port(
+        summary, my_nets, scfg, hcfg, histograms, ftp_pairs, p2p_ips,
+        media_ips, batch_time,
+    )
+    ap_alerts, ap_updates = S.atypical_pairs(summary, scfg, hcfg, histograms, p2p_ips, batch_time)
+    ad_alerts, ad_updates = S.atypical_data(
+        summary, my_nets, scfg, hcfg, histograms, p2p_ips, media_ips,
+        big_provider_nets, batch_time,
+    )
+    profile_updates, new_big_providers = S.alien_network_profile(
+        summary, my_nets, scfg, hcfg, histograms, ftp_pairs, p2p_ips
+    )
+    hp_alerts, hp_updates = S.horizontal_portscan(
+        summary, my_nets, scfg, hcfg, histograms, p2p_ips, batch_time
+    )
+    vp_alerts, vp_updates = S.vertical_portscan(summary, scfg, hcfg, histograms, p2p_ips, batch_time)
+    alerts += [at_alerts, aa_alerts, ap_alerts, ad_alerts, hp_alerts, vp_alerts]
+    updates = [at_updates, aa_updates, ap_updates, ad_updates, profile_updates, hp_updates, vp_updates]
+
+    os_repos = reputation.filter(F.col("list") == "OSRepo").select(
+        "ip",
+        F.when(F.col("list_type") == "windows", "Windows")
+        .when(F.col("list_type") == "linux", "Linux")
+        .when(F.col("list_type") == "android", "Android")
+        .when(F.col("list_type") == "apple", "Apple")
+        .when(F.col("list_type") == "freebsd", "FreeBSD")
+        .alias("os"),
+    )
+    new_reputation = new_proxies.select(
+        F.col("myIP").alias("ip"), F.lit("ProxyServer").alias("list"),
+        F.lit("whitelist").alias("list_type"),
+    ).unionByName(
+        new_big_providers.select(
+            F.col("prefix").alias("ip"), F.lit("BigProvider").alias("list"),
+            F.lit("whitelist").alias("list_type"),
+        )
+    )
+    return (
+        reduce(DataFrame.unionByName, alerts),
+        reduce(DataFrame.unionByName, updates),
+        D.os_inventory(summary, os_repos),
+        new_reputation,
+    )
+
+
+def _rows(df):
+    """Order-free, comparable rendering of a frame (map columns become
+    sorted item tuples)."""
+    def canon(v):
+        return tuple(sorted(v.items())) if isinstance(v, dict) else v
+
+    return sorted((tuple(canon(v) for v in r) for r in df.collect()), key=repr)
+
+
+def test_materialized_dependencies_match_lazy_twin(spark):
+    """Materializing the summary and the FTP/P2P/media dependency sets
+    once per cycle must not change a single output row: every frame of
+    run_sflow_batch equals what the same detectors return over the
+    lazy summary and lazy dependency frames."""
+    from hogzilla_spark.config import DEFAULT
+    from hogzilla_spark.plans.batch import run_sflow_batch
+
+    args = (
+        datagen.sflows_df(spark),
+        datagen.mynets_df(spark),
+        datagen.reputation_df(spark).unionByName(
+            spark.createDataFrame(
+                # whitelist the near-miss twins of the planted atypical
+                # TCP port / data hosts, so both lists reach an output
+                [("10.1.0.151", "ProxyServer", "whitelist", "proxy"),
+                 ("91.91.91.2", "BigProvider", "whitelist", "cdn")],
+                "ip string, list string, list_type string, description string",
+            )
+        ),
+        datagen.histograms_df(spark),
+    )
+    got = run_sflow_batch(spark, *args, batch_time=1_700_000_000)
+    want = _lazy_sflow_batch(spark, *args, DEFAULT, 1_700_000_000)
+    for name, lazy in zip(("alerts", "state_updates", "inventory", "new_reputation"), want):
+        got_rows = _rows(getattr(got, name))
+        assert got_rows == _rows(lazy), name
+        assert got_rows, name  # non-vacuous
