@@ -29,6 +29,7 @@ from hogzilla_spark.functions.scalar import (
     ua_family_sql,
 )
 from hogzilla_spark.operators.histogram import EPSILON
+from hogzilla_spark.sources.catalog import materialize_cut
 from hogzilla_spark.state.store import EMPTY_MAP_D, mk_update
 
 def _saved(histograms: DataFrame, family: str, prefix_len: int) -> DataFrame:
@@ -125,8 +126,17 @@ def auth_profile(
     ua_count_hint: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """One batch pass: returns (combined alerts 826001204, state updates
-    for HIST20/21/22).  `ua_count_hint` forwards to `prepare_auth` —
-    when given, plan construction is fully lazy (no probe job)."""
+    for HIST20/21/22).
+
+    The prepared, labelled records are materialized once
+    (``sources.catalog.materialize_cut(always=True)``), so the alerts
+    and the three histogram updates read one small leaf instead of each
+    re-running the UA dictionary, its join and the projection.  Building
+    the plans therefore runs one materialization job, plus the
+    cardinality probe unless `ua_count_hint` (forwarded to
+    `prepare_auth`) is given.  A caller's open ``cut_scope`` releases
+    the cut when it exits, so it must enclose every action on the
+    returned frames (the stream's ``process_batch`` does)."""
     rec = prepare_auth(auth, ua_count_hint=ua_count_hint)
     loc_label = F.concat(
         F.regexp_replace(F.trim("city"), " ", "_"),
@@ -138,7 +148,10 @@ def auth_profile(
         F.lit("/"),
         F.regexp_replace(F.trim("service"), " ", "_"),
     )
-    rec = rec.withColumn("loc_label", loc_label).withColumn("service_label", service_label)
+    rec = materialize_cut(
+        rec.withColumn("loc_label", loc_label).withColumn("service_label", service_label),
+        always=True,
+    )
 
     s20 = _saved(histograms, "HIST20", 8)
     s21 = _saved(histograms, "HIST21", 8)

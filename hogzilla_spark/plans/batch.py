@@ -23,6 +23,8 @@ gate (``HZ_CUT_MIN_INPUT_BYTES``) that is a ``localCheckpoint``; above
 it, the reliable, fault-tolerant checkpoint.  The sets stay DataFrames:
 consumers still join them with broadcast anti/semi joins, and only
 the home-network prefixes and the two whitelists reach the driver.
+``run_and_persist`` releases the cuts when its sinks and the state
+commit are done (``sources.catalog.cut_scope``).
 
 Scale notes: every dimension input is broadcast; state scoring is one
 equi-join per family; state writing is one upsert per run.
@@ -40,7 +42,7 @@ from hogzilla_spark.detectors import sflow as D
 from hogzilla_spark.detectors import stateful as S
 from hogzilla_spark.detectors.base import signatures_df
 from hogzilla_spark.operators.rollup import icmp_summary, sflow_summary
-from hogzilla_spark.sources.catalog import materialize_cut
+from hogzilla_spark.sources.catalog import cut_scope, materialize_cut
 from hogzilla_spark.state import store
 
 @dataclass
@@ -205,31 +207,37 @@ def run_and_persist(
 ) -> BatchResult:
     """Full lifecycle: load state → detect → append sinks → merge state.
     The engine's equivalent of one 6-hour reference cycle.  Passing the
-    nDPI `flows` table adds the ML modules + HIST01 clustering sinks."""
+    nDPI `flows` table adds the ML modules + HIST01 clustering sinks.
+
+    Everything the cycle materializes is released when it returns
+    (``sources.catalog.cut_scope``), so one session can run cycle after
+    cycle without growing; a caller that still reads the returned frames
+    afterwards opens its own scope around the call and those reads."""
     histograms = store.load(spark, state_path).persist()
-    if flows is not None:
-        result = run_full_batch(
-            spark, sflows, mynets, reputation, histograms, flows, cfg, batch_time
-        )
-    else:
-        result = run_sflow_batch(
-            spark, sflows, mynets, reputation, histograms, cfg, batch_time
-        )
-    result.alerts.write.mode("append").parquet(f"{out_dir}/events.parquet")
-    # S11: persist the HIST01 server-profile clustering when present
-    for name, sink in (("hist_clusters", "clusters"), ("hist_cluster_members", "cluster_members")):
-        if name in result.per_detector:
-            result.per_detector[name].write.mode("overwrite").parquet(
-                f"{out_dir}/{sink}.parquet"
+    with cut_scope():
+        if flows is not None:
+            result = run_full_batch(
+                spark, sflows, mynets, reputation, histograms, flows, cfg, batch_time
             )
-    result.inventory.write.mode("overwrite").parquet(f"{out_dir}/inventory.parquet")
-    result.new_reputation.write.mode("append").parquet(
-        f"{out_dir}/reputation_learned.parquet"
-    )
-    signatures_df(spark).write.mode("overwrite").parquet(
-        f"{out_dir}/signatures.parquet"
-    )
-    store.upsert(spark, result.state_updates, state_path, saved=histograms)
+        else:
+            result = run_sflow_batch(
+                spark, sflows, mynets, reputation, histograms, cfg, batch_time
+            )
+        result.alerts.write.mode("append").parquet(f"{out_dir}/events.parquet")
+        # S11: persist the HIST01 server-profile clustering when present
+        for name, sink in (("hist_clusters", "clusters"), ("hist_cluster_members", "cluster_members")):
+            if name in result.per_detector:
+                result.per_detector[name].write.mode("overwrite").parquet(
+                    f"{out_dir}/{sink}.parquet"
+                )
+        result.inventory.write.mode("overwrite").parquet(f"{out_dir}/inventory.parquet")
+        result.new_reputation.write.mode("append").parquet(
+            f"{out_dir}/reputation_learned.parquet"
+        )
+        signatures_df(spark).write.mode("overwrite").parquet(
+            f"{out_dir}/signatures.parquet"
+        )
+        store.upsert(spark, result.state_updates, state_path, saved=histograms)
     histograms.unpersist()
     return result
 
@@ -339,26 +347,29 @@ def main() -> None:
         flows = datagen.flows_df(spark)
     elif args.flows:
         flows = spark.read.parquet(args.flows)
-    result = run_and_persist(
-        spark,
-        sflows,
-        datagen.mynets_df(spark),
-        datagen.reputation_df(spark),
-        state_path=f"{args.out}/state/histograms.parquet",
-        out_dir=args.out,
-        batch_time=args.batch_time,
-        flows=flows,
-    )
-    for name, df in sorted(result.per_detector.items()):
-        n = df.count()
-        print(f"{name:28s} {n} alerts")
-    print(f"state entries: {store.load(spark, f'{args.out}/state/histograms.parquet').count()}")
-    if args.show_frames:
-        print(f"inventory: {[tuple(r) for r in result.inventory.collect()]}")
-        print(f"learned reputation: {[tuple(r) for r in result.new_reputation.collect()]}")
-    else:
-        print(f"inventory rows: {result.inventory.count()}")
-        print(f"learned reputation rows: {result.new_reputation.count()}")
+    # the scope outlives run_and_persist's own: the counts below still
+    # read the cycle's frames
+    with cut_scope():
+        result = run_and_persist(
+            spark,
+            sflows,
+            datagen.mynets_df(spark),
+            datagen.reputation_df(spark),
+            state_path=f"{args.out}/state/histograms.parquet",
+            out_dir=args.out,
+            batch_time=args.batch_time,
+            flows=flows,
+        )
+        for name, df in sorted(result.per_detector.items()):
+            n = df.count()
+            print(f"{name:28s} {n} alerts")
+        print(f"state entries: {store.load(spark, f'{args.out}/state/histograms.parquet').count()}")
+        if args.show_frames:
+            print(f"inventory: {[tuple(r) for r in result.inventory.collect()]}")
+            print(f"learned reputation: {[tuple(r) for r in result.new_reputation.collect()]}")
+        else:
+            print(f"inventory rows: {result.inventory.count()}")
+            print(f"learned reputation rows: {result.new_reputation.count()}")
     spark.stop()
 
 if __name__ == "__main__":

@@ -18,6 +18,8 @@ a Kafka deployment swaps `.format`).
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -207,12 +209,16 @@ def materialize_cut(df: DataFrame, always: bool = False) -> DataFrame:
     dir can be used, falls back to persist(MEMORY_AND_DISK)+count,
     which keeps lineage (recompute on executor loss) at the cost of a
     larger plan string.
+
+    Cuts are owned by the enclosing :func:`cut_scope`, which releases
+    them when it exits; outside a scope they live as long as the
+    session (or until Spark's context cleaner collects them).
     """
     est = plan_input_bytes(df)
     big = est is None or est >= _cut_gate_bytes()
     if not big:
-        return df.localCheckpoint(eager=True) if always else df
-    return _reliable_cut(df)
+        return _track(df.localCheckpoint(eager=True)) if always else df
+    return _track(_reliable_cut(df))
 
 def _reliable_cut(df: DataFrame) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
@@ -234,6 +240,52 @@ def _reliable_cut(df: DataFrame) -> DataFrame:
     out = cached.checkpoint(eager=True)
     cached.unpersist(blocking=False)
     return out
+
+_scope = threading.local()  # .cuts: the open scope's cuts, None outside one
+
+def _track(cut: DataFrame) -> DataFrame:
+    cuts = getattr(_scope, "cuts", None)
+    if cuts is not None:
+        cuts.append(cut)
+    return cut
+
+@contextmanager
+def cut_scope():
+    """Release every :func:`materialize_cut` made inside the block when
+    it exits, so a session that runs cycle after cycle (the 6-hour
+    batch, each auth micro-batch) does not accumulate cached blocks or
+    checkpoint files.
+
+    A ``localCheckpoint`` cut is unpersisted; a reliable checkpoint has
+    its files deleted; the lineage-keeping fallback is unpersisted.
+    Frames that read a released cut cannot be executed afterwards, so
+    the scope must enclose every action on them.  Scopes nest: an inner
+    scope leaves its cuts to the outermost one, so a caller that still
+    reads a cycle's frames after the cycle returns opens its own scope
+    around both.  Scopes are per thread (a streaming ``foreachBatch``
+    callback runs on its own thread)."""
+    if getattr(_scope, "cuts", None) is not None:
+        yield
+        return
+    _scope.cuts = cuts = []
+    try:
+        yield
+    finally:
+        _scope.cuts = None
+        for cut in cuts:
+            _release(cut)
+
+def _release(cut: DataFrame) -> None:
+    if cut.is_cached:  # the lineage-keeping persist fallback
+        cut.unpersist()
+        return
+    rdd = cut._jdf.queryExecution().logical().rdd()
+    rdd.unpersist(False)
+    ckpt = rdd.getCheckpointFile()
+    if ckpt.isDefined():  # a reliable checkpoint: delete its files
+        sc = cut.sparkSession.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
 
 def read_jsonl(
     spark: SparkSession,

@@ -7,9 +7,10 @@ are an equi-join against the saved state table, and writes are ONE
 batched upsert per family per run.  Two backends behind one entry
 point (:func:`upsert`): real Delta ``MERGE INTO`` when the session has
 delta-spark wired in (:func:`delta_available` probes at call time), else
-full-outer-join + staged parquet rewrite — the same shuffle shape, with
-crash-safety from the atomic generation pointer.  Both apply the
-identical per-mode merge expressions (:func:`_merge_exprs`).
+one full-outer join with a single projection over it, written as a
+staged parquet rewrite — the same shuffle shape, with crash-safety from
+the atomic generation pointer.  Both apply the identical per-mode merge
+expressions (:func:`_merge_exprs`).
 
 Update modes:
   - "merge":     weighted mean + decay (Histograms.merge, H5)
@@ -144,8 +145,12 @@ def _merge_exprs(
 
 def apply_updates(saved: DataFrame, updates: DataFrame) -> DataFrame:
     """One batched upsert: full-outer join saved ↔ batch updates on
-    hist_name, merge per the row's mode.  updates columns:
-    (hist_name, size, values, labels, mode)."""
+    hist_name, then ONE projection over the join picks each row's
+    outcome — saved-only rows keep the saved histogram, update-only rows
+    take the update, matched rows merge per the row's mode
+    (:func:`_merge_exprs`).  The join and its inputs are planned and
+    executed once.  updates columns: (hist_name, size, values, labels,
+    mode)."""
     s = saved.select(
         F.col("hist_name"),
         F.col("size").alias("s_size"),
@@ -159,30 +164,19 @@ def apply_updates(saved: DataFrame, updates: DataFrame) -> DataFrame:
         F.coalesce(F.col("labels"), EMPTY_MAP_S()).alias("u_labels"),
         F.col("mode"),
     )
-    j = s.join(u, "hist_name", "full_outer")
-    both = j.filter(F.col("s_size").isNotNull() & F.col("u_size").isNotNull())
-    only_saved = j.filter(F.col("u_size").isNull()).select(
-        "hist_name",
-        F.col("s_size").alias("size"),
-        F.col("s_values").alias("values"),
-        F.col("s_labels").alias("labels"),
-    )
-    only_new = j.filter(F.col("s_size").isNull()).select(
-        "hist_name",
-        F.col("u_size").alias("size"),
-        F.col("u_values").alias("values"),
-        F.col("u_labels").alias("labels"),
-    )
     exprs = _merge_exprs(
         "s_size", "s_values", "s_labels", "u_size", "u_values", "u_labels", "mode"
     )
-    merged = both.select(
+    return s.join(u, "hist_name", "full_outer").select(
         "hist_name",
-        exprs["size"].alias("size"),
-        exprs["values"].alias("values"),
-        exprs["labels"].alias("labels"),
+        *(
+            F.when(F.col("u_size").isNull(), F.col(f"s_{c}"))
+            .when(F.col("s_size").isNull(), F.col(f"u_{c}"))
+            .otherwise(merged)
+            .alias(c)
+            for c, merged in exprs.items()
+        ),
     )
-    return merged.unionByName(only_saved).unionByName(only_new)
 
 def save(df: DataFrame, path: str, batch_id: int | None = None) -> None:
     """Generation-based commit (parquet has no MERGE; Delta would):

@@ -8,7 +8,9 @@ checkpoint: exactly-once batch tracking, no destructive reads, same
 
 Each micro-batch runs the same auth_profile plan as the batch path and
 MERGEs state via foreachBatch — the Spark-idiomatic shape of the
-reference's read-score-merge loop.
+reference's read-score-merge loop.  The batch's prepared records are
+materialized once and released after the state commit, so a long-running
+stream holds no cached blocks or checkpoint files from earlier batches.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql.streaming import StreamingQuery
 from hogzilla_spark.config import DEFAULT, EngineConfig
 from hogzilla_spark.detectors.auth import auth_profile
 from hogzilla_spark.schemas import AUTHRECORDS
+from hogzilla_spark.sources import catalog
 from hogzilla_spark.state import store
 
 def start_auth_stream(
@@ -77,10 +80,9 @@ def start_auth_stream(
             return  # replay of an already-committed batch
         if batch_df.isEmpty():
             return
-        # persist: the gate probe (when due), the dictionary build, the
-        # alert scoring, and the three histogram updates all re-read
-        # this frame — and a re-scan of a non-deterministic source
-        # could otherwise observe different data per consumer
+        # persist: the gate probe (when due) and the record preparation
+        # both read this frame — and a re-scan of a non-deterministic
+        # source could otherwise observe different data per consumer
         batch_df = batch_df.persist()
         if probe["n_ua"] is None or probe["since"] + 1 >= ua_probe_every:
             from pyspark.sql import functions as F
@@ -92,16 +94,20 @@ def start_auth_stream(
         else:
             probe["since"] += 1
         saved = store.load(spark, state_path).persist()
-        alerts, updates = auth_profile(
-            batch_df, saved, cfg.auth, cfg.hist, batch_time=batch_id,
-            ua_count_hint=probe["n_ua"],
-        )
-        alerts.write.mode("overwrite").parquet(
-            os.path.join(alerts_dir, f"batch_id={batch_id}")
-        )
-        store.save(
-            store.apply_updates(saved, updates), state_path, batch_id=batch_id
-        )
+        # the prepared records are cut once inside auth_profile and read
+        # by the alerts and the three histogram updates; the scope frees
+        # the cut once the state is committed
+        with catalog.cut_scope():
+            alerts, updates = auth_profile(
+                batch_df, saved, cfg.auth, cfg.hist, batch_time=batch_id,
+                ua_count_hint=probe["n_ua"],
+            )
+            alerts.write.mode("overwrite").parquet(
+                os.path.join(alerts_dir, f"batch_id={batch_id}")
+            )
+            store.save(
+                store.apply_updates(saved, updates), state_path, batch_id=batch_id
+            )
         saved.unpersist()
         batch_df.unpersist()
 

@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from hogzilla_spark import datagen
+from hogzilla_spark.functions.scalar import TCP_PSHACK
 from hogzilla_spark.plans.batch import run_full_batch
 
 def test_full_batch_all_modules(spark):
@@ -168,8 +169,22 @@ def test_materialized_dependencies_match_lazy_twin(spark):
     from hogzilla_spark.config import DEFAULT
     from hogzilla_spark.plans.batch import run_sflow_batch
 
+    T = 1_700_000_000
+    # a media client whose confirmed (PSH-ACK) mid-port session would
+    # also feed atypical_alien_tcp_port's HIST02 update if the media
+    # set did not exclude it — the fixture's media client has no
+    # confirmed flow, so without this host a mis-wired media set
+    # reaches no output
+    media = [
+        datagen._pkt("10.1.0.102", "5557", "198.51.200.3", "5002", "6", 500,
+                     flags=TCP_PSHACK, ts=T),
+        datagen._pkt("198.51.200.3", "5002", "10.1.0.102", "5557", "6", 2000,
+                     flags=TCP_PSHACK, ts=T + 1000),
+    ]
     args = (
-        datagen.sflows_df(spark),
+        datagen.sflows_df(spark).unionByName(
+            spark.createDataFrame(media, datagen.sflows_df(spark).schema)
+        ),
         datagen.mynets_df(spark),
         datagen.reputation_df(spark).unionByName(
             spark.createDataFrame(
@@ -182,9 +197,41 @@ def test_materialized_dependencies_match_lazy_twin(spark):
         ),
         datagen.histograms_df(spark),
     )
-    got = run_sflow_batch(spark, *args, batch_time=1_700_000_000)
-    want = _lazy_sflow_batch(spark, *args, DEFAULT, 1_700_000_000)
+    got = run_sflow_batch(spark, *args, batch_time=T)
+    want = _lazy_sflow_batch(spark, *args, DEFAULT, T)
     for name, lazy in zip(("alerts", "state_updates", "inventory", "new_reputation"), want):
         got_rows = _rows(getattr(got, name))
         assert got_rows == _rows(lazy), name
         assert got_rows, name  # non-vacuous
+    # the planted host is a media client, so it is excluded from HIST02
+    assert "10.1.0.102" in {r.myIP for r in got.per_detector["media_client"]
+                            .select(F.element_at("data", "myIP").alias("myIP")).collect()}
+    assert not got.state_updates.filter(F.col("hist_name") == "HIST02-10.1.0.102").count()
+
+
+def test_run_and_persist_releases_cuts_between_cycles(spark, tmp_path, monkeypatch, held):
+    """Two cycles in one session leave no persisted RDD and no cut
+    checkpoint file behind: the first cuts through localCheckpoint, the
+    second (gate forced to 0) through reliable checkpoints.  The packets
+    are read from parquet: an in-memory frame has no size estimate, and
+    the cut gate sends unknown sizes to the reliable path."""
+    from hogzilla_spark.plans.batch import run_and_persist
+    from hogzilla_spark.sources import catalog
+
+    released = []
+    release = catalog._release
+    monkeypatch.setattr(catalog, "_release", lambda cut: (released.append(cut), release(cut)))
+    datagen.sflows_df(spark).write.parquet(str(tmp_path / "sflows"))
+    args = (
+        spark.read.parquet(str(tmp_path / "sflows")), datagen.mynets_df(spark),
+        datagen.reputation_df(spark), str(tmp_path / "state"), str(tmp_path / "out"),
+    )
+    rdds_before, files_before = held()
+    for gate in (None, "0"):
+        if gate is not None:
+            monkeypatch.setenv("HZ_CUT_MIN_INPUT_BYTES", gate)
+        run_and_persist(spark, *args)
+        rdds_after, files_after = held()
+        assert rdds_after <= rdds_before, (gate, rdds_after - rdds_before)
+        assert files_after <= files_before, (gate, files_after - files_before)
+    assert len(released) >= 10  # five shared inputs per cycle, at least

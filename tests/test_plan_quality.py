@@ -330,3 +330,48 @@ def test_batch_reads_shared_inputs_as_materialized_leaves(spark, tmp_path):
         assert ("myIP",) in rdd_shapes, (name, leaves)  # P2P / media IP sets
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") <= bound, (name, plan.count("Exchange"))
+
+def test_auth_batch_reads_prepared_records_once(spark, tmp_path):
+    """auth_profile cuts its prepared records once: the HIST20/21/22
+    updates read the auth input through one materialized (LogicalRDD)
+    leaf, never the UA dictionary or its join again, and the alerts
+    read that same leaf.  apply_updates is one full-outer join under
+    one projection: exactly one Join and no Union, where the
+    three-branch merge planned the join three times."""
+    from hogzilla_spark import datagen
+    from hogzilla_spark.config import DEFAULT
+    from hogzilla_spark.detectors.auth import auth_profile
+    from hogzilla_spark.sources.catalog import cut_scope
+    from hogzilla_spark.state import store
+
+    datagen.auth_df(spark).write.parquet(str(tmp_path / "auth"))
+    datagen.auth_histograms_df(spark).write.parquet(str(tmp_path / "hist"))
+    saved = spark.read.parquet(str(tmp_path / "hist"))
+
+    def leaves(df):
+        jleaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return [jleaves.apply(i) for i in range(jleaves.size())]
+
+    def count(df, node):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return len(re.findall(rf"\b{node} ", plan))
+
+    with cut_scope():
+        alerts, updates = auth_profile(
+            spark.read.parquet(str(tmp_path / "auth")), saved, DEFAULT.auth, DEFAULT.hist
+        )
+        upd_leaves = leaves(updates)
+        assert {leaf.nodeName() for leaf in upd_leaves} == {"LogicalRDD"}, upd_leaves
+        (rec_id,) = {leaf.rdd().id() for leaf in upd_leaves}
+        hist_cols = tuple(saved.columns)
+        for leaf in leaves(alerts):
+            out = leaf.output()
+            cols = tuple(out.apply(j).name() for j in range(out.size()))
+            assert (leaf.nodeName() == "LogicalRDD" and leaf.rdd().id() == rec_id) or (
+                cols == hist_cols
+            ), (leaf.nodeName(), cols)
+        assert count(store.apply_updates(saved, updates), "Join") == 1
+        updates.write.parquet(str(tmp_path / "upd"))
+    merged = store.apply_updates(saved, spark.read.parquet(str(tmp_path / "upd")))
+    assert count(merged, "Join") == 1
+    assert count(merged, "Union") == 0

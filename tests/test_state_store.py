@@ -346,3 +346,63 @@ def test_run_and_persist_goes_through_upsert(spark, tmp_path):
     src = inspect.getsource(batch.run_and_persist)
     assert "store.upsert(" in src
     assert "merge_into" not in src
+
+
+def _three_branch_apply_updates(saved, updates):
+    """The earlier apply_updates, kept as the twin of the one-pass
+    merge: the full-outer join filtered three ways (both / saved only /
+    update only) and put back together with two unions."""
+    from pyspark.sql import functions as F
+
+    s = saved.select(
+        "hist_name", F.col("size").alias("s_size"),
+        F.col("values").alias("s_values"), F.col("labels").alias("s_labels"),
+    )
+    u = updates.select(
+        "hist_name", F.col("size").alias("u_size"), F.col("values").alias("u_values"),
+        F.coalesce(F.col("labels"), store.EMPTY_MAP_S()).alias("u_labels"), "mode",
+    )
+    j = s.join(u, "hist_name", "full_outer")
+    both = j.filter(F.col("s_size").isNotNull() & F.col("u_size").isNotNull())
+    only_saved = j.filter(F.col("u_size").isNull()).select(
+        "hist_name", F.col("s_size").alias("size"),
+        F.col("s_values").alias("values"), F.col("s_labels").alias("labels"),
+    )
+    only_new = j.filter(F.col("s_size").isNull()).select(
+        "hist_name", F.col("u_size").alias("size"),
+        F.col("u_values").alias("values"), F.col("u_labels").alias("labels"),
+    )
+    exprs = store._merge_exprs(
+        "s_size", "s_values", "s_labels", "u_size", "u_values", "u_labels", "mode"
+    )
+    merged = both.select("hist_name", *(e.alias(c) for c, e in exprs.items()))
+    return merged.unionByName(only_saved).unionByName(only_new)
+
+
+def test_one_pass_merge_matches_three_branch_twin(spark):
+    """apply_updates' single projection equals the three-branch union
+    for every mode and every row kind: matched, saved only, update
+    only.  Sizes straddle the 1,000 decay point; values and labels
+    overlap partly so every merge expression has work to do."""
+    saved_rows, update_rows = [], []
+    for mode in ("merge", "merge_max", "replace"):
+        for size in (40, 1500):
+            saved_rows.append((f"HIST01-both-{mode}-{size}", size,
+                               {"80": 0.75, "443": 0.25}, {"80": "http"}))
+            update_rows.append((f"HIST01-both-{mode}-{size}", 8,
+                                {"443": "0.5", "22": "0.5"}, {"22": "ssh", "80": "web"}, mode))
+        saved_rows.append((f"HIST01-saved-{mode}", 12, {"53": 1.0}, {"53": "dns"}))
+        update_rows.append((f"HIST01-new-{mode}", 3, {"25": "1.0"}, None, mode))
+    saved = spark.createDataFrame(saved_rows, HISTOGRAMS)
+    updates = _mk_updates(spark, update_rows)
+
+    def rows(df):
+        canon = lambda v: tuple(sorted(v.items())) if isinstance(v, dict) else v  # noqa: E731
+        return sorted(tuple(canon(v) for v in r) for r in df.collect())
+
+    got = store.apply_updates(saved, updates)
+    want = _three_branch_apply_updates(saved, updates)
+    assert got.dtypes == want.dtypes
+    assert rows(got) == rows(want)
+    kinds = {r.hist_name.split("-")[1] for r in got.collect()}
+    assert kinds == {"both", "saved", "new"} and got.count() == 12

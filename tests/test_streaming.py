@@ -8,6 +8,7 @@ import threading
 import time
 
 import pyspark.sql.functions as F
+import pytest
 
 from hogzilla_spark import datagen
 from hogzilla_spark.state import store
@@ -97,6 +98,31 @@ def test_auth_stream_replay_idempotent(spark, tmp_path):
     }
     assert sizes_after == sizes_before  # histograms NOT double-counted
     assert spark.read.parquet(alerts_dir).count() == alerts_before
+
+@pytest.mark.parametrize("gate", [None, "0"], ids=["local_cut", "reliable_cut"])
+def test_auth_stream_releases_cuts_per_batch(spark, tmp_path, monkeypatch, held, gate):
+    """Each micro-batch frees what it materialized: after three batches
+    in one session no persisted RDD and no cut checkpoint file is left
+    that was not there before the stream.  The reliable leg forces the
+    checkpoint-file path through the cut gate."""
+    if gate is not None:
+        monkeypatch.setenv("HZ_CUT_MIN_INPUT_BYTES", gate)
+    input_dir = str(tmp_path / "auth_in")
+    state_path = str(tmp_path / "state")
+    store.save(datagen.auth_histograms_df(spark), state_path)
+    for _ in range(3):
+        datagen.auth_df(spark).coalesce(1).write.mode("append").parquet(input_dir)
+
+    rdds_before, files_before = held()
+    q = start_auth_stream(
+        spark, input_dir, state_path, str(tmp_path / "alerts"), str(tmp_path / "ckpt"),
+        trigger={"availableNow": True}, max_files_per_trigger=1,
+    )
+    q.awaitTermination(180)
+    assert store.last_applied_batch(state_path) == 2  # three batches ran
+    rdds_after, files_after = held()
+    assert rdds_after <= rdds_before, rdds_after - rdds_before
+    assert files_after <= files_before, files_after - files_before
 
 def test_streaming_histogram_state_learn_and_score(spark, tmp_path):
     """applyInPandasWithState histogram cycle: below the learn gate
